@@ -498,13 +498,13 @@ def q_entity_index(spark, sf):
 
 def q_mention_detect(spark, sf):
     from refined_spark.operators.extract import with_extracted_text
-    from refined_spark.operators.mentions import detect_mentions
+    from refined_spark.operators.mentions import detect_mention_rows
     from refined_spark.pipeline import match_dictionary
 
     docs = with_extracted_text(_fx(spark, sf, "documents")).withColumn(
         "text", F.col("extracted")).drop("extracted")
     keys = match_dictionary(_fx(spark, sf, "pem"), _fx(spark, sf, "entity"))
-    return detect_mentions(spark, docs, keys).select(
+    return detect_mention_rows(spark, docs, keys).select(
         "url", "start", "length", "mention_text").orderBy("url", "start")
 
 
@@ -1403,7 +1403,13 @@ def q_seq_pack_mat(spark, sf):
     toks = docs.select("doc_id", F.regexp_extract_all(
         "text", F.lit(TOKEN_PATTERN), F.lit(0)).alias("tokens"))
     m = pack_manifest(docs, seq_len=512, n_shards=4)
+    # one sequence = md5 of its space-joined tokens + its token count:
+    # scalar columns any canonicalizer can hash, and still exact, since
+    # TOKEN_PATTERN never matches whitespace
     return (materialize_sequences(m, toks)
+            .select("shard", "seq_id",
+                    F.md5(F.concat_ws(" ", "tokens")).alias("tokens_md5"),
+                    F.size("tokens").alias("n_tokens"))
             .orderBy("shard", "seq_id"))
 
 
@@ -2535,7 +2541,8 @@ def _seq_pack_mat_oracle_sql() -> str:
     """Materialization replay: 1-based-inclusive list slicing of the
     per-doc token arrays under the manifest, flattened in pos order —
     the defining concatenate-and-chunk identity, now driver-gated
-    rather than pytest-only."""
+    rather than pytest-only. Reported as q_seq_pack_mat reports it:
+    md5 of the space-joined tokens plus the token count."""
     from refined_spark.operators.packing import TOKEN_PATTERN
 
     # DuckDB single-quoted literals are backslash-verbatim — the
@@ -2546,14 +2553,19 @@ def _seq_pack_mat_oracle_sql() -> str:
         with {_seq_pack_fan_cte()}, tok as (
           select doc_id, regexp_extract_all(text, '{pat}') as toks
           from documents
+        ), seq as (
+          select m.shard, m.seq_id,
+                 flatten(list(tok.toks[m.doc_offset + 1 :
+                                       m.doc_offset + m.n_slice_tokens]
+                              order by m.pos_in_seq)) as tokens
+          from m join tok using (doc_id)
+          group by m.shard, m.seq_id
         )
-        select m.shard, m.seq_id,
-               flatten(list(tok.toks[m.doc_offset + 1 :
-                                     m.doc_offset + m.n_slice_tokens]
-                            order by m.pos_in_seq)) as tokens
-        from m join tok using (doc_id)
-        group by m.shard, m.seq_id
-        order by m.shard, m.seq_id
+        select shard, seq_id,
+               md5(array_to_string(tokens, ' ')) as tokens_md5,
+               len(tokens) as n_tokens
+        from seq
+        order by shard, seq_id
     """
 
 

@@ -122,8 +122,8 @@ def candidates_rows(gold_spans, pem, human_qcodes, backward=False):
     return rows
 
 
-def score_candidates(cands, ctx_word, emb_by_qcode, closure_by_qcode,
-                     topic_class, weights, et=None):
+def score_mention(cands, ctx_word, emb_by_qcode, closure_by_qcode,
+                  topic_class, weights, et=None):
     """Returns (logits list, softmax probs incl. NOTA last).
 
     ``et`` switches the class features to the entity-typing protocol:
@@ -191,7 +191,7 @@ def link_doc(spans, cand_map, emb_by_qcode, closure_by_qcode, topic_class,
         if not cands:
             links[sp["start"]] = (None, 0.0)
             continue
-        _logits, probs = score_candidates(
+        _logits, probs = score_mention(
             cands, sp.get("ctx_word"), emb_by_qcode, closure_by_qcode,
             topic_class, weights, et=et,
         )
@@ -213,7 +213,7 @@ def topk_doc(spans, cand_map, emb_by_qcode, closure_by_qcode, topic_class,
     out = {}
     for sp in spans:
         cands = cand_map[sp["start"]]
-        _logits, probs = score_candidates(
+        _logits, probs = score_mention(
             cands, sp.get("ctx_word"), emb_by_qcode, closure_by_qcode,
             topic_class, weights,
         )

@@ -13,12 +13,15 @@ Two modes, mirroring the reference:
   coref registration trigger, candidate_generator.py:74-80).
 
 Context extraction (the deterministic stand-in for the mention-encoder
-input) is pure Column work: the corpus marks the disambiguating context
-as "(word)" right after a mention; ``F.regexp_extract`` pulls it JVM-side.
+input): the corpus marks the disambiguating context as "(word)" right
+after a mention. Provided-spans mode pulls it JVM-side with
+``F.regexp_extract``; the e2e matcher applies the same (ASCII) pattern in
+the Python pass it already makes over the text.
 
 Scale: both modes are shuffle-free maps over documents; the matcher
-dictionary is an ~O(1M key) broadcast set (same deployment shape as the
-reference's per-process LMDB/PEM dict, lmdb_wrapper.py:43-55).
+dictionary is a parquet artifact each Python worker loads once (same
+deployment shape as the reference's per-process LMDB/PEM dict,
+lmdb_wrapper.py:43-55).
 """
 
 from __future__ import annotations
@@ -28,9 +31,7 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
-    ArrayType,
     IntegerType,
     StringType,
     StructField,
@@ -41,13 +42,6 @@ from ..functions.normalize import normalize_surface_form, normalize_udf
 
 _TOKEN_RE = re.compile(r"\S+")
 MAX_NGRAM = 3
-
-_SPAN_SCHEMA = ArrayType(StructType([
-    StructField("start", IntegerType()),
-    StructField("length", IntegerType()),
-    StructField("mention_text", StringType()),
-]))
-
 
 def _norm_token_cached(tok: str, cache: dict[str, str]) -> str:
     """Token-level normalization (remove_the=False: "the " stripping is a
@@ -133,21 +127,6 @@ def load_match_dictionary(path: str) -> tuple[set, set]:
     return v
 
 
-def make_detect_udf(spark, match_keys: list[str]):
-    """Broadcast the dictionary once; return an Arrow-batched matcher UDF."""
-    keys = {k for k in match_keys if k}
-    first_words = {k.split(" ", 1)[0] for k in keys}
-    bc = spark.sparkContext.broadcast((keys, first_words))
-
-    @pandas_udf(_SPAN_SCHEMA)
-    def detect(texts: pd.Series) -> pd.Series:
-        d, fw = bc.value
-        cache = _TOKEN_NORM_CACHE
-        return texts.map(lambda t: _match_doc(t, d, fw, cache))
-
-    return detect
-
-
 def attach_context(df: DataFrame, text_col: str = "text") -> DataFrame:
     """ctx_word = word in "(word)" immediately after the span, else NULL."""
     tail = F.substring(
@@ -179,33 +158,12 @@ def mentions_from_spans(documents: DataFrame, spans: DataFrame) -> DataFrame:
 
     Output: url, start, length, mention_text, norm_sf, ctx_word, mention_key.
     The documents join is an equi-join on url (broadcast-able only for tiny
-    corpora; at scale both sides hash-partition on url — a single shuffle
-    that the downstream per-url coref stage reuses).
+    corpora; at scale both sides hash-partition on url — one shuffle).
     """
     joined = spans.select("url", "start", "length", "mention_text").join(
         documents.select("url", "text"), "url"
     )
     out = attach_context(joined)
-    return (
-        out.withColumn("norm_sf", normalize_udf(F.col("mention_text")))
-        .withColumn("mention_key", mention_id_col())
-        .drop("text")
-    )
-
-
-def detect_mentions(spark, documents: DataFrame,
-                    match_keys: list[str]) -> DataFrame:
-    """E2e mode: dictionary MD over extracted text.
-
-    Output schema matches :func:`mentions_from_spans`.
-    """
-    detect = make_detect_udf(spark, match_keys)
-    spans = (
-        documents.select("url", "text",
-                         F.explode(detect(F.col("text"))).alias("sp"))
-        .select("url", "text", "sp.start", "sp.length", "sp.mention_text")
-    )
-    out = attach_context(spans)
     return (
         out.withColumn("norm_sf", normalize_udf(F.col("mention_text")))
         .withColumn("mention_key", mention_id_col())
@@ -228,14 +186,12 @@ _MENTION_SCHEMA = StructType([
 ])
 
 
-def _mention_rows_runner(dict_src, from_html: bool):
-    """Shared mapInPandas body: (url, html|text) batches -> mention rows.
+def _mention_rows_runner(dict_src):
+    """mapInPandas body: (url, text) batches -> mention rows.
 
     dict_src: ("bc", broadcast) for a driver-broadcast key set (fixture
     scale) or ("path", parquet_path) for the executor-side artifact load
     (production scale — zero driver materialization)."""
-    from ..functions.normalize import normalize_surface_form
-    from .extract import extract_text
 
     def run(batches):
         if dict_src[0] == "bc":
@@ -247,9 +203,9 @@ def _mention_rows_runner(dict_src, from_html: bool):
         for pdf in batches:
             urls, starts, lengths, texts_m, norms, ctxs, mkeys = (
                 [], [], [], [], [], [], [])
-            src = (pdf["html"] if from_html else pdf["text"]).tolist()
-            for url, payload in zip(pdf["url"].tolist(), src):
-                text = extract_text(payload) if from_html else (payload or "")
+            for url, text in zip(pdf["url"].tolist(),
+                                 pdf["text"].tolist()):
+                text = text or ""
                 for off, ln, phrase in _match_doc(text, d, fw, tok_cache):
                     nrm = phrase_cache.get(phrase)
                     if nrm is None:
@@ -291,37 +247,16 @@ def detect_mention_rows(spark, documents: DataFrame,
                         match_keys: list[str] | None = None,
                         text_col: str = "text",
                         dict_path: str | None = None) -> DataFrame:
-    """One-Arrow-crossing mention detection over an existing text column
-    (e.g. the JVM extraction output): text in, mention rows out. Same
-    output as :func:`fused_extract_detect`; use when extraction already
-    ran JVM-side so only the dictionary matcher needs Python.
+    """E2e mode: dictionary MD over an existing text column (e.g. the
+    JVM extraction output) in ONE Arrow crossing — text in, normalized
+    mention rows out, the :func:`mentions_from_spans` columns.
+    Extraction stays JVM-side, so only the dictionary matcher needs
+    Python, and only mention rows (far smaller than the text) leave it.
 
     Pass ``dict_path`` (a parquet artifact written by
     ``pipeline.write_match_dictionary``) to load the key set executor-side
     — the production path; ``match_keys`` broadcasts from the driver and
     is for fixture-scale runs/tests only."""
-    run = _mention_rows_runner(_dict_src(spark, match_keys, dict_path),
-                               from_html=False)
+    run = _mention_rows_runner(_dict_src(spark, match_keys, dict_path))
     return (documents.select("url", F.col(text_col).alias("text"))
             .mapInPandas(run, _MENTION_SCHEMA))
-
-
-def fused_extract_detect(spark, documents: DataFrame,
-                         match_keys: list[str] | None = None,
-                         dict_path: str | None = None) -> DataFrame:
-    """E2e fast path: html -> text -> spans -> normalized mention rows in
-    ONE Arrow crossing (`mapInPandas`), byte-equal to the composed
-    extract -> detect -> attach_context -> normalize pipeline (pinned by
-    tests/test_pipeline_parity.py).
-
-    Why: the composed path moves every document's text across the
-    JVM<->Python boundary twice and every mention once more for
-    normalization; on a memory-bandwidth-bound box that traffic — not
-    compute — dominates the pipeline front end. Here html enters, only
-    mention rows (two orders of magnitude smaller) leave, and the raw
-    corpus is never shuffled at all (scan partitions feed the UDF
-    directly; downstream stages shuffle the small mention rows by url).
-    """
-    run = _mention_rows_runner(_dict_src(spark, match_keys, dict_path),
-                               from_html=True)
-    return documents.select("url", "html").mapInPandas(run, _MENTION_SCHEMA)

@@ -3,18 +3,23 @@ links → transitive clusters.
 
 Stage graph (per SURVEY.md §3.1's Spark restatement):
 
-  documents ──extract(E1, map)──┐
-  gold_spans ──────────────────mentions(M1) ──⋈ broadcast pem (M2/blocking)
-      └─ groupBy(url) coref (M3/M4) ─ candidates
-  candidates ⋈ entity ⋈ entity_emb ⋈ topic_class → scores (F3-F6, codegen)
-      → window argmax + threshold (F7) → links
+  documents ──extract(E1, JVM map)──┐
+  gold_spans | dictionary matcher ──mentions(M1)
+  mentions ⋈ broadcast alias arrays (M2/blocking) + coref (M3/M4)
+      → one merged candidate array per mention
+  candidate arrays × broadcast feature map (F3-F6, codegen transform)
+      → first-occurrence argmax + threshold (F7) → links
       → large-star/small-star CC (A9) → clusters
 
 Shuffle census at scale (the thing that matters at 100 TB):
-  1. mentions⋈documents + groupBy(url) coref: ONE hash shuffle on url.
-  2. candidate scoring joins: broadcast (dims) — zero shuffle — or
-     qcode_idx shuffle when the embedding table exceeds broadcast range.
-  3. per-mention windows: shuffle on mention_key.
+  1. spans mode: mentions⋈documents on url (e2e mode: none — the
+     dictionary matcher is a map over the scan).
+  2. coref: two narrow shuffles over single-word mentions only (the
+     (url, word) registration join + the latest-registration agg);
+     multi-word mentions never shuffle.
+  3. scoring + links: zero — the feature map and pair logits are
+     vocabulary-sized broadcasts built from the distinct
+     (surface, ctx) pairs.
   4. CC: one groupBy per star round (log-bounded; 2-3 on ER graphs).
 Filters/column pruning reach the parquet scan (only url/html/text/lang are
 read; `html` only when extraction runs).
@@ -142,7 +147,6 @@ def run_pipeline(
     fixture_dir: str,
     mode: str = "spans",
     broadcast_pem: bool = True,
-    broadcast_emb: bool = True,
     dict_dir: str | None = None,
     documents: DataFrame | None = None,
     gold_spans: DataFrame | None = None,

@@ -4,22 +4,18 @@ every strong human name, so a receiver with no registration BEFORE it
 falls back to the document's LAST registration; wherever an earlier
 registration exists, pass-2 overwrites restore forward semantics.
 
-Three independent implementations must agree: the array-native production
-plan, the row-shaped declarative plan, and the sequential pandas replay —
-plus the fixture oracle parquet (a fourth, NumPy-side replay)."""
+The one Spark plan (mention_candidate_arrays) is checked against the
+fixture oracle parquet — an independent NumPy-side replay of both
+protocols — and against a hand-built case."""
 
 import os
 
-import pyspark.sql.functions as F
 import pytest
 
 from refined_spark.operators.candidates import (
-    direct_candidates,
     explode_candidate_arrays,
     mention_candidate_arrays,
     pem_surface_arrays,
-    with_person_coref,
-    with_person_coref_python,
 )
 from refined_spark.operators.mentions import mentions_from_spans
 
@@ -63,20 +59,6 @@ def test_forward_matches_oracle_and_differs(spark, fx_t1, world):
     assert got == want_fwd
     # non-vacuity: the corpus actually discriminates the two protocols
     assert want_fwd != want_back
-
-
-def test_three_backward_implementations_agree(spark, world):
-    arr = _arr_rows(mention_candidate_arrays(
-        world["mentions"], world["arrays"], backward=True))
-    direct = direct_candidates(world["mentions"], world["pem"],
-                               world["entity"])
-    row = {tuple(r) for r in
-           with_person_coref(direct, mentions=world["mentions"],
-                             backward=True)
-           .where("qcode is not null").select(COLS).collect()}
-    seq = {tuple(r) for r in with_person_coref_python(direct, backward=True)
-           .where("qcode is not null").select(COLS).collect()}
-    assert arr == row == seq and arr
 
 
 def test_backward_hand_case(spark, fx_t1, world):

@@ -1,11 +1,8 @@
 """M6 LSH blocking + skew salting."""
 
-import pyspark.sql.functions as F
-
 from refined_spark.operators.blocking import (
     hot_keys,
     lsh_mention_pairs,
-    salted_candidate_join,
     with_block_keys,
 )
 
@@ -36,20 +33,15 @@ def test_lsh_near_surfaces_share_some_band(spark):
     assert ("m1", "m3") not in pairs and ("m2", "m3") not in pairs
 
 
-def test_hot_key_census_and_salted_join(spark, fx_t1):
-    pem = spark.read.parquet(f"{fx_t1}/pem.parquet")
+def test_hot_key_census_and_salted_join(spark):
+    """The hot-key census that feeds the salted join. Salting semantics
+    are pinned by test_salted_array_join_with_forced_hot_key and
+    test_pipeline_parity::test_salted_nonbroadcast_equals_broadcast."""
     rows = [(f"m{i:04d}", "acme") for i in range(50)]
     rows += [(f"r{i:04d}", "jaguar") for i in range(3)]
     m = _mentions(spark, rows)
     hot = hot_keys(m, "norm_sf", threshold=10)
     assert [r["norm_sf"] for r in hot.collect()] == ["acme"]
-
-    salted = salted_candidate_join(m, pem, hot, buckets=4)
-    plain = m.join(pem, m.norm_sf == pem.surface_form, "left") \
-        .drop("surface_form")
-    got = {(r["mention_key"], r["qcode"]) for r in salted.collect()}
-    want = {(r["mention_key"], r["qcode"]) for r in plain.collect()}
-    assert got == want  # salting never changes join semantics
 
 
 def test_salted_array_join_with_forced_hot_key(spark):

@@ -9,8 +9,10 @@ from refined_spark.pipeline import run_pipeline
 
 
 @pytest.fixture(scope="module")
-def result(spark, fx_t1):
-    return run_pipeline(spark, fx_t1, mode="spans")
+def results(spark, fx_t1, fx_t2):
+    """spans-mode pipeline per fixture tier, keyed by fixture dir."""
+    return {fx: run_pipeline(spark, fx, mode="spans")
+            for fx in (fx_t1, fx_t2)}
 
 
 def _rows(df, cols, sort_cols=None):
@@ -19,145 +21,71 @@ def _rows(df, cols, sort_cols=None):
             for r in df.orderBy(*sort_cols).collect()]
 
 
-def test_candidates_match_oracle(spark, fx_t1, result):
-    exp = spark.read.parquet(os.path.join(fx_t1, "expected_candidates.parquet"))
-    cols = ["url", "start", "qcode", "cand_source", "cand_rank"]
-    got = _rows(result["candidates"], cols)
-    want = _rows(exp, cols)
-    assert got == want
-    # probabilities too (exact: both sides read the same pem doubles)
-    gotp = _rows(result["candidates"], ["url", "start", "qcode", "prob"])
-    wantp = _rows(exp, ["url", "start", "qcode", "prob"])
-    assert gotp == wantp
+def test_candidates_match_oracle(spark, results):
+    for fx, res in results.items():
+        exp = spark.read.parquet(
+            os.path.join(fx, "expected_candidates.parquet"))
+        cols = ["url", "start", "qcode", "cand_source", "cand_rank"]
+        assert _rows(res["candidates"], cols) == _rows(exp, cols), fx
+        # probabilities too (exact: both sides read the same pem doubles)
+        cols = ["url", "start", "qcode", "prob"]
+        assert _rows(res["candidates"], cols) == _rows(exp, cols), fx
 
 
-def test_links_match_oracle(spark, fx_t1, result):
-    exp = spark.read.parquet(os.path.join(fx_t1, "expected_links.parquet"))
-    got = _rows(result["links"], ["url", "start", "pred_qcode"])
-    want = _rows(exp, ["url", "start", "pred_qcode"])
-    assert got == want
-    # confidences within fp tolerance (different summation orders)
-    gotc = dict(((r["url"], r["start"]), r["confidence"])
-                for r in result["links"].collect())
-    for r in exp.collect():
-        assert abs(gotc[(r["url"], r["start"])] - r["confidence"]) < 1e-6
+def test_links_match_oracle(spark, results):
+    for fx, res in results.items():
+        exp = spark.read.parquet(os.path.join(fx, "expected_links.parquet"))
+        cols = ["url", "start", "pred_qcode"]
+        assert _rows(res["links"], cols) == _rows(exp, cols), fx
+        # confidences within fp tolerance (different summation orders)
+        gotc = dict(((r["url"], r["start"]), r["confidence"])
+                    for r in res["links"].collect())
+        for r in exp.collect():
+            assert abs(gotc[(r["url"], r["start"])]
+                       - r["confidence"]) < 1e-6, (fx, r["url"], r["start"])
 
 
-def test_clusters_match_oracle(spark, fx_t1, result):
+def test_clusters_match_oracle(spark, fx_t1, results):
     exp = spark.read.parquet(os.path.join(fx_t1, "expected_clusters.parquet"))
-    got = _rows(result["clusters"], ["url", "start", "cluster_id"])
+    got = _rows(results[fx_t1]["clusters"], ["url", "start", "cluster_id"])
     want = _rows(exp, ["url", "start", "cluster_id"])
     assert got == want
 
 
-def test_pairwise_f1_gate(spark, fx_t2):
+def test_pairwise_f1_gate(spark, fx_t2, results):
     """THE gate: F1 >= 0.99 vs reference-rule clusters on same-block pairs,
     at the t2 (sf0.01-equivalent) tier."""
     from refined_spark.operators.metrics import pairwise_f1
 
-    res = run_pipeline(spark, fx_t2, mode="spans")
+    res = results[fx_t2]
     exp = spark.read.parquet(os.path.join(fx_t2, "expected_clusters.parquet"))
     pairs = res["tables"]["gold_pairs"]
     row = pairwise_f1(pairs, res["clusters"], exp).collect()[0]
     assert row["f1"] >= 0.99, dict(row.asDict())
 
 
-def test_e2e_mode_finds_matchable_mentions(spark, fx_t1):
-    res = run_pipeline(spark, fx_t1, mode="e2e")
-    gold = spark.read.parquet(os.path.join(fx_t1, "gold_spans.parquet"))
-    got = {(r["url"], r["start"], r["length"])
-           for r in res["mentions"].collect()}
-    want = {(r["url"], r["start"], r["length"])
-            for r in gold.where("dict_matchable").collect()}
-    assert got == want
-
-def test_fused_detect_equals_composed_path(spark, fx_t1):
-    """fused_extract_detect (one Arrow crossing) must be row-identical to
-    extract -> detect_mentions -> attach_context -> normalize."""
+def test_e2e_mode_finds_matchable_mentions(spark, fx_t1, fx_t2):
+    """e2e mode's dictionary matcher finds exactly the dict_matchable
+    gold spans, and builds the same seven mention columns that
+    provided-spans mode builds from those spans."""
     import pyspark.sql.functions as F
 
     from refined_spark.operators.extract import with_extracted_text
-    from refined_spark.operators.mentions import (
-        detect_mentions,
-        fused_extract_detect,
-    )
-    from refined_spark.pipeline import load_tables, match_dictionary
+    from refined_spark.operators.mentions import mentions_from_spans
 
-    t = load_tables(spark, fx_t1)
-    keys = match_dictionary(t["pem"], t["entity"])
-    docs = with_extracted_text(t["documents"]).withColumn(
-        "text", F.col("extracted")).drop("extracted")
-    composed = {tuple(r) for r in detect_mentions(spark, docs, keys)
-                .select("url", "start", "length", "mention_text", "norm_sf",
-                        "ctx_word", "mention_key").collect()}
-    fused = {tuple(r) for r in fused_extract_detect(
-        spark, t["documents"], keys)
-        .select("url", "start", "length", "mention_text", "norm_sf",
-                "ctx_word", "mention_key").collect()}
-    assert fused == composed
-
-def test_array_path_equals_row_path(spark, fx_t2):
-    """The array-native production plan and the row-based cross-check
-    implementations must agree row-for-row (candidates) and on every
-    prediction (links) — same semantics, different physical plans."""
-    import pyspark.sql.functions as F
-
-    from refined_spark.operators.candidates import (
-        direct_candidates,
-        explode_candidate_arrays,
-        mention_candidate_arrays,
-        pem_surface_arrays,
-        with_person_coref,
-    )
-    from refined_spark.operators.extract import extracted_text_col
-    from refined_spark.operators.mentions import detect_mention_rows
-    from refined_spark.operators.scoring import (
-        extract_links,
-        links_from_logits,
-        score_candidates,
-        with_candidate_logits,
-    )
-    from refined_spark.pipeline import (
-        load_tables,
-        load_weights,
-        match_dictionary,
-    )
-
-    t = load_tables(spark, fx_t2)
-    docs = t["documents"].withColumn("text", extracted_text_col("html"))
-    mentions = detect_mention_rows(
-        spark, docs, match_dictionary(t["pem"], t["entity"])).cache()
-
-    arr = mention_candidate_arrays(
-        mentions, pem_surface_arrays(t["pem"], t["entity"]))
-    cand_a = explode_candidate_arrays(arr).where("qcode is not null")
-    cand_r = with_person_coref(
-        direct_candidates(mentions, t["pem"], t["entity"]),
-        mentions=mentions).where("qcode is not null")
-    cols = ["mention_key", "qcode", "prob", "cand_source", "cand_rank"]
-    a = {tuple(r) for r in cand_a.select(cols).collect()}
-    b = {tuple(r) for r in cand_r.select(cols).collect()}
-    assert a == b
-
-    weights = load_weights(t["ed_weights"])
-    links_a = links_from_logits(with_candidate_logits(
-        arr, t["entity"], t["entity_emb"], t["topic_class"], weights))
-    # row path needs the NULL-sentinel rows for no-candidate mentions
-    cand_all = with_person_coref(
-        direct_candidates(mentions, t["pem"], t["entity"]),
-        mentions=mentions)
-    links_r = extract_links(score_candidates(
-        cand_all, mentions, t["entity"], t["entity_emb"],
-        t["topic_class"], weights))
-    la = {(r["mention_key"], r["pred_qcode"], round(r["confidence"], 9))
-          for r in links_a.collect()}
-    lr = {(r["mention_key"], r["pred_qcode"], round(r["confidence"], 9))
-          for r in links_r.collect()}
-    assert {x[:2] for x in la} == {x[:2] for x in lr}
-    # confidences equal within fp tolerance (different summation shapes)
-    da = dict((x[0], x[2]) for x in la)
-    for k, v in ((x[0], x[2]) for x in lr):
-        assert abs(da[k] - v) < 1e-6, k
+    cols = ["url", "start", "length", "mention_text", "norm_sf",
+            "ctx_word", "mention_key"]
+    for fx in (fx_t1, fx_t2):
+        res = run_pipeline(spark, fx, mode="e2e")
+        t = res["tables"]
+        docs = with_extracted_text(t["documents"]).select(
+            "url", F.col("extracted").alias("text"))
+        want = {tuple(r) for r in mentions_from_spans(
+            docs, t["gold_spans"].where("dict_matchable"))
+            .select(cols).collect()}
+        got = {tuple(r) for r in res["mentions"].select(cols).collect()}
+        assert got == want and got, fx
+        res["unpersist"]()
 
 
 def test_salted_nonbroadcast_equals_broadcast(spark, fx_t2):
